@@ -81,6 +81,15 @@ def load_config(path: str) -> dict:
         return json.loads(text)
 
 
+def _register_tables(spark: SparkSession, regs) -> None:
+    """``--table name=path``: each parquet path as a temp view."""
+    for reg in regs or []:
+        name, _, path = reg.partition("=")
+        if not path:
+            raise SystemExit(f"--table needs name=path, got {reg!r}")
+        spark.read.parquet(path).createOrReplaceTempView(name)
+
+
 def _add_job_args(p: argparse.ArgumentParser) -> None:
     """Flags shared by `run` and every `validate` subcommand: IO, lineage,
     partition manifest, resume."""
@@ -732,11 +741,7 @@ def _run_query(args: argparse.Namespace) -> int:
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-query")
-    for reg in args.table:
-        name, _, path = reg.partition("=")
-        if not path:
-            raise SystemExit(f"--table needs name=path, got {reg!r}")
-        spark.read.parquet(path).createOrReplaceTempView(name)
+    _register_tables(spark, args.table)
     df = spark.sql(args.sql)
     rows = df.limit(args.max_rows + 1).collect()
     truncated = len(rows) > args.max_rows
@@ -967,11 +972,7 @@ def _run_find_tables(args: argparse.Namespace) -> int:
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-find-tables")
     try:
-        for reg in args.table:
-            name, _, path = reg.partition("=")
-            if not path:
-                raise SystemExit(f"--table needs name=path, got {reg!r}")
-            spark.read.parquet(path).createOrReplaceTempView(name)
+        _register_tables(spark, args.table)
         print(json.dumps(find_tables(spark, args.score_cutoff)))
     finally:
         if not preexisting:
@@ -1014,7 +1015,7 @@ def main(argv: list[str] | None = None) -> int:
 def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     from .config import ValidationConfig, consts
     from .lineage import LineageStore, config_hash
-    from .plans.compiler import run_validation
+    from .plans.compiler import prepare_row_sides, run_validation
     from .session import get_spark
     from .sources.sinks import report_to_text, write_report
 
@@ -1022,11 +1023,7 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     spark = get_spark("psdv-job")
 
     is_custom_query = cfg_dict.get("type") == consts.CUSTOM_QUERY
-    for reg in getattr(args, "table", None) or []:
-        name, _, path = reg.partition("=")
-        if not path:
-            raise SystemExit(f"--table needs name=path, got {reg!r}")
-        spark.read.parquet(path).createOrReplaceTempView(name)
+    _register_tables(spark, getattr(args, "table", None))
     if is_custom_query and not (args.source_path or args.source_table):
         # custom-query sides are SQL text run by the compiler; the schema
         # for '*' aggregate expansion comes from the source query itself
@@ -1070,6 +1067,15 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
         )
 
         pkeys = [k.strip() for k in args.partition_keys.split(",")]
+        stray = [k for k in pkeys if k not in config.primary_keys]
+        if config.validation_type == consts.ROW_VALIDATION and stray:
+            # verdicts are per PK range: a partition key outside the PK
+            # would split one row's identity across partitions
+            raise SystemExit(
+                f"--partition-keys {','.join(stray)}: not among the primary "
+                f"keys ({','.join(config.primary_keys)}); partition keys "
+                "must be PK columns"
+            )
         if args.use_manifest:
             # reloading the original manifest pins partition identity to the
             # run that emitted it, even if the table changed since (ADVICE)
@@ -1136,6 +1142,10 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
         target = target.filter(pred)
 
     report = run_validation(config, source, target, spark=spark)
+    row_src = row_tgt = None
+    if config.validation_type == consts.ROW_VALIDATION and source is not None:
+        # lineage verdicts and the rate gate compare what the report does
+        row_src, row_tgt = prepare_row_sides(config, source, target)
     if getattr(args, "explain", False):
         # dry run: show the physical plan the job WOULD execute — shuffle
         # count, join strategy, pushdown — without paying for it
@@ -1150,17 +1160,13 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     try:
         report.count()  # materialize once, here
 
-        if store and manifest is not None and config.validation_type == (
-            consts.ROW_VALIDATION
-        ):
+        if store and manifest is not None and row_src is not None:
             # per-manifest-partition verdicts into the lineage table: the
             # resumable unit matches reference generate-table-partitions'
-            # YAMLs. The verdict join uses the SAME prepared frames as the
-            # report (calculated fields + filters + comparison semantics) so
-            # verdicts can't diverge from report rows (ADVICE r2).
-            from .functions.calculated import apply_calculated_fields
+            # YAMLs. The verdicts align the compiler's prepared sides on the
+            # config's PKs, like the report, and read each row's partition
+            # off its aligned (coalesced) PK columns.
             from .metadata import RunMetadata
-            from .operators.aggregates import apply_filters
             from .operators.partitioning import assign_partition_id
             from .operators.row_compare import row_compare_verdicts
 
@@ -1169,18 +1175,13 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
             )
             bound_rows = [{k: r[f"{k}_lower"] for k in pkeys} for r in mrows]
             part_ids = [r["partition_id"] for r in mrows]
-            vsrc = apply_calculated_fields(source, config.calculated_fields)
-            vtgt = apply_calculated_fields(target, config.calculated_fields)
-            if config.filters:
-                vsrc = apply_filters(vsrc, config.filters, "source")
-                vtgt = apply_filters(vtgt, config.filters, "target")
             use_fields = (
                 config.comparison_fields if not config.hash_columns else None
             )
             verdicts = row_compare_verdicts(
-                vsrc,
-                vtgt,
-                pkeys,
+                row_src,
+                row_tgt,
+                config.primary_keys,
                 partition_col=assign_partition_id(
                     pkeys, bound_rows, partition_ids=part_ids
                 ),
@@ -1238,28 +1239,24 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
         )
 
         gate_spec = getattr(args, "rate_gate", None)
-        if (
-            gate_spec
-            and config.validation_type == consts.ROW_VALIDATION
-            and source is not None
-        ):
+        if gate_spec and row_src is not None:
             from .operators.row_compare import violation_rate_gate
 
             day_col, _, thr = gate_spec.partition(":")
             cmp_cols = [c.column for c in config.comparison_fields] or [
                 c
-                for c in source.columns
+                for c in row_src.columns
                 if c not in config.primary_keys
                 and c != day_col
-                and c in target.columns
+                and c in row_tgt.columns
                 and (
                     (config.hash_columns or "*") == "*"
                     or c in config.hash_columns
                 )
             ]
             gate = violation_rate_gate(
-                source,
-                target,
+                row_src,
+                row_tgt,
                 config.primary_keys,
                 cmp_cols,
                 day_col=day_col,

@@ -26,6 +26,8 @@ Spark-first re-expression (same observable semantics, one distributed plan):
 from __future__ import annotations
 
 import json
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -154,6 +156,65 @@ def _group_by_columns_json(join_on_fields: tuple) -> Column:
     return F.concat(F.lit("{"), F.concat_ws(", ", *parts), F.lit("}"))
 
 
+def align(
+    source: DataFrame,
+    target: DataFrame,
+    keys,
+    value_cols,
+    null_safe: bool = False,
+) -> DataFrame:
+    """THE source-vs-target alignment: one full-outer join on ``keys``
+    (a cross join without keys: column validations, one row a side).
+
+    Output: the keys (coalesced across sides), ``__src_present`` /
+    ``__tgt_present`` (TRUE, or NULL when the row is missing on that side)
+    and ``__src_<c>`` / ``__tgt_<c>`` for every column in ``value_cols``.
+    ``null_safe`` aligns NULL keys with ``<=>`` (pandas-merge semantics);
+    it is still an equi-join, but its coalesce/isnull join keys defeat
+    storage bucketing, so plain equality is the default.
+    """
+    keys = list(keys)
+    src = source.select(
+        *keys,
+        F.lit(True).alias("__src_present"),
+        *[F.col(c).alias(f"__src_{c}") for c in value_cols],
+    )
+    tgt = target.select(
+        *keys,
+        F.lit(True).alias("__tgt_present"),
+        *[F.col(c).alias(f"__tgt_{c}") for c in value_cols],
+    )
+    if not keys:
+        return src.crossJoin(tgt)
+    if not null_safe:
+        return src.join(tgt, keys, "full_outer")
+    src = src.withColumnsRenamed({k: f"__sk_{k}" for k in keys})
+    tgt = tgt.withColumnsRenamed({k: f"__tk_{k}" for k in keys})
+    cond = reduce(
+        operator.and_,
+        [F.col(f"__sk_{k}").eqNullSafe(F.col(f"__tk_{k}")) for k in keys],
+    )
+    j = src.join(tgt, cond, "full_outer")
+    return j.select(
+        *[F.coalesce(f"__sk_{k}", f"__tk_{k}").alias(k) for k in keys],
+        *[c for c in j.columns if not c.startswith(("__sk_", "__tk_"))],
+    )
+
+
+def any_differs(value_cols) -> Column:
+    """On an ``align`` frame: some value column is not null-safe equal
+    across the sides (both-NULL counts as equal, reference
+    combiner.py:159-171)."""
+    return reduce(
+        operator.or_,
+        [
+            ~F.col(f"__src_{c}").eqNullSafe(F.col(f"__tgt_{c}"))
+            for c in value_cols
+        ],
+        F.lit(False),
+    )
+
+
 REPORT_COLUMNS = [
     "validation_name",
     "validation_type",
@@ -213,20 +274,7 @@ def generate_report(
     tgt_types = {f.name: f.dataType.simpleString() for f in target.schema.fields}
 
     value_cols = [c for c in source.columns if c not in join_on_fields]
-    src = source.select(
-        *join_on_fields,
-        F.lit(True).alias("__src_present"),
-        *[F.col(c).alias(f"__src_{c}") for c in value_cols],
-    )
-    tgt = target.select(
-        *join_on_fields,
-        F.lit(True).alias("__tgt_present"),
-        *[F.col(c).alias(f"__tgt_{c}") for c in value_cols],
-    )
-    if join_on_fields:
-        joined = src.join(tgt, list(join_on_fields), "full_outer")
-    else:
-        joined = src.crossJoin(tgt)
+    joined = align(source, target, join_on_fields, value_cols)
 
     src_present = F.coalesce(F.col("__src_present"), F.lit(False))
     tgt_present = F.coalesce(F.col("__tgt_present"), F.lit(False))

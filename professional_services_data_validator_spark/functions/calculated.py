@@ -366,6 +366,19 @@ def apply_calculated_fields(
     return out
 
 
+def hash_part(
+    column: str, trim_strings: bool = True, case_insensitive: bool = False
+) -> Column:
+    """One column of the row-hash chain: cast(string) -> ifnull ->
+    [rstrip] -> [upper]."""
+    col = F.coalesce(
+        F.col(column).cast("string"), F.lit(consts.DEFAULT_REPLACEMENT_STRING)
+    )
+    if trim_strings:
+        col = F.rtrim(col)
+    return F.upper(col) if case_insensitive else col
+
+
 def build_row_hash(
     df: DataFrame,
     columns: list[str],
@@ -387,16 +400,9 @@ def build_row_hash(
     Column order is the given ``columns`` order (the reference sorts its
     expansion by table column order; callers pass that order in).
     """
-    parts = []
-    for c in columns:
-        col = F.col(c).cast("string")
-        col = F.coalesce(col, F.lit(consts.DEFAULT_REPLACEMENT_STRING))
-        if trim_strings:
-            col = F.rtrim(col)
-        if case_insensitive:
-            col = F.upper(col)
-        parts.append(col)
-    concat = F.concat_ws("", *parts)
+    concat = F.concat_ws("", *[
+        hash_part(c, trim_strings, case_insensitive) for c in columns
+    ])
     if algo == "sha256":
         h = F.sha2(concat, 256)
     elif algo == "farm_fingerprint":

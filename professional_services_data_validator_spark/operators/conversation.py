@@ -21,9 +21,7 @@ windowed lag() (which would sort every conversation), adjacent-pair
 violations are counted by joining the table to itself on
 (conv_id, turn_idx + 1). That join is co-partitioned on conv_id — at
 100 TB with the transcript table bucketed by conv_id it is shuffle-free;
-AQE skew-join splits hot conversations. The streaming twin (stateful
-turn-order monitor, streaming/incremental.py) applies the same transition
-rules incrementally.
+AQE skew-join splits hot conversations.
 
 Output (one row per failing conversation):
   (conv_id, n_turns, check, detail) — long format, one row per violated

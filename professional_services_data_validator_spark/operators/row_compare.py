@@ -5,8 +5,9 @@ Reference analog: Row validation (reference data_validation/config_manager.py
 semantics, combiner value-comparison branch combiner.py:147-171). The
 reference materializes both row sets in driver pandas and recursively drills
 down failing groups (data_validation.py:175-271) because it cannot join at
-scale; here the alignment IS a distributed full-outer join, so drilldown is
-unnecessary — violations come straight out of the join.
+scale; here the alignment IS a distributed full-outer join
+(``combiner.align``, the one kernel every source-vs-target diff shares), so
+drilldown is unnecessary — violations come straight out of the join.
 
 Scale posture:
 - the join shuffles both sides by PK once; with bucketed/partitioned Iceberg
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 from ..config import ComparisonFieldSpec, consts
 from ..functions.calculated import build_row_hash
 from ..metadata import RunMetadata, ValidationMeta
-from ..combiner import generate_report
+from ..combiner import align, any_differs, generate_report
 
 
 def _prepare(
@@ -129,13 +130,10 @@ def row_compare(
                 "hash_columns/comparison_fields"
             )
         hash_columns, algo = concat_columns, "concat"
-    src_prep, fields = _prepare(
-        source, primary_keys, comparison_fields, hash_columns,
-        trim_string_pks, case_insensitive, hash_algo=algo,
-    )
-    tgt_prep, _ = _prepare(
-        target, primary_keys, comparison_fields, hash_columns,
-        trim_string_pks, case_insensitive, hash_algo=algo,
+    (src_prep, fields), (tgt_prep, _) = (
+        _prepare(side, primary_keys, comparison_fields, hash_columns,
+                 trim_string_pks, case_insensitive, hash_algo=algo)
+        for side in (source, target)
     )
     join_on = list(primary_keys) + (fields if hash_columns is not None else [])
     for name in fields:
@@ -166,49 +164,6 @@ def row_compare(
     )
 
 
-def _joined(source, target, primary_keys, compare_cols, null_safe=False):
-    src = source.select(
-        *primary_keys,
-        F.lit(True).alias("__src_present"),
-        *[F.col(c).alias(f"__src_{c}") for c in compare_cols],
-    )
-    tgt = target.select(
-        *primary_keys,
-        F.lit(True).alias("__tgt_present"),
-        *[F.col(c).alias(f"__tgt_{c}") for c in compare_cols],
-    )
-    if not null_safe:
-        return src.join(tgt, list(primary_keys), "full_outer")
-    # NULL-safe PK alignment: a NULL key matches a NULL key (pandas-merge
-    # semantics in the reference's in-memory combiner treat NaN keys as
-    # equal); <=> is plannable as a hash/SMJ equi-join, not a cartesian.
-    from functools import reduce
-
-    src_k = src.select(
-        *[F.col(k).alias(f"__sk_{k}") for k in primary_keys],
-        *[c for c in src.columns if c not in primary_keys],
-    )
-    tgt_k = tgt.select(
-        *[F.col(k).alias(f"__tk_{k}") for k in primary_keys],
-        *[c for c in tgt.columns if c not in primary_keys],
-    )
-    cond = reduce(
-        lambda a, b: a & b,
-        [
-            F.col(f"__sk_{k}").eqNullSafe(F.col(f"__tk_{k}"))
-            for k in primary_keys
-        ],
-    )
-    j = src_k.join(tgt_k, cond, "full_outer")
-    return j.select(
-        *[
-            F.coalesce(F.col(f"__sk_{k}"), F.col(f"__tk_{k}")).alias(k)
-            for k in primary_keys
-        ],
-        *[c for c in j.columns if not c.startswith(("__sk_", "__tk_"))],
-    )
-
-
 def row_violations(
     source: DataFrame,
     target: DataFrame,
@@ -228,14 +183,14 @@ def row_violations(
     shape); ``null_safe_pks`` aligns NULL PKs with <=>.
     """
     binary = hash_algo == "sha256"
-    src_prep, fields = _prepare(source, primary_keys, None, hash_columns,
-                                False, case_insensitive, hash_algo,
-                                binary_hash=binary)
-    tgt_prep, _ = _prepare(target, primary_keys, None, hash_columns, False,
-                           case_insensitive, hash_algo, binary_hash=binary)
+    (src_prep, fields), (tgt_prep, _) = (
+        _prepare(side, primary_keys, None, hash_columns, False,
+                 case_insensitive, hash_algo, binary_hash=binary)
+        for side in (source, target)
+    )
     cmp_col = fields[0]  # hash__all, or concat__all under --concat mode
-    j = _joined(src_prep, tgt_prep, primary_keys, [cmp_col],
-                null_safe=null_safe_pks)
+    j = align(src_prep, tgt_prep, primary_keys, [cmp_col],
+              null_safe=null_safe_pks)
     src_p = F.col("__src_present").isNotNull()
     tgt_p = F.col("__tgt_present").isNotNull()
     vtype = (
@@ -325,35 +280,20 @@ def row_compare_verdicts(
     verdicts must not diverge from the report): explicit
     ``comparison_fields`` compare null-safely per field; otherwise the
     ``hash_columns`` row hash is used with the same case-insensitivity and
-    PK-trim flags. Callers are responsible for passing frames with the
-    config's calculated fields / filters already applied.
+    PK-trim flags. Callers pass frames with the config's calculated fields
+    and filters already applied (``plans.compiler.prepare_row_sides``).
     """
     use_hash = comparison_fields is None
     hc = hash_columns if use_hash else None
-    src_prep, fields = _prepare(
-        source, primary_keys, comparison_fields, hc,
-        trim_string_pks, case_insensitive, binary_hash=use_hash,
+    (src_prep, fields), (tgt_prep, _) = (
+        _prepare(side, primary_keys, comparison_fields, hc,
+                 trim_string_pks, case_insensitive, binary_hash=use_hash)
+        for side in (source, target)
     )
-    tgt_prep, _ = _prepare(
-        target, primary_keys, comparison_fields, hc,
-        trim_string_pks, case_insensitive, binary_hash=use_hash,
-    )
-    compare_cols = fields if not use_hash else ["hash__all"]
-    j = _joined(src_prep, tgt_prep, primary_keys, compare_cols)
+    j = align(src_prep, tgt_prep, primary_keys, fields)
     src_p = F.col("__src_present").isNotNull()
     tgt_p = F.col("__tgt_present").isNotNull()
-    from functools import reduce
-
-    # both-null = equal (reference combiner.py:159-171); eqNullSafe gives
-    # exactly that, so a mismatch is any field NOT null-safe-equal
-    diff_any = reduce(
-        lambda a, b: a | b,
-        [
-            ~F.col(f"__src_{c}").eqNullSafe(F.col(f"__tgt_{c}"))
-            for c in compare_cols
-        ],
-    )
-    mism = src_p & tgt_p & diff_any
+    mism = src_p & tgt_p & any_differs(fields)
     return (
         j.groupBy(partition_col.alias("partition_id"))
         .agg(
@@ -395,9 +335,9 @@ def violation_rate_gate(
     sizes vary by orders of magnitude.)
 
     A violation is a PK present on only one side, or any compare column
-    differing null-safely. Plan: one full-outer join on the PKs (the same
-    shape as row_violations — shuffle-free when both sides are bucketed
-    by PK), then ONE day aggregate; the Wilson bounds
+    differing null-safely. Plan: the shared ``combiner.align`` full-outer
+    join on the PKs (the same kernel as row_violations — shuffle-free when
+    both sides are bucketed by PK), then ONE day aggregate; the Wilson bounds
     (p + z^2/2n -/+ z*sqrt(p(1-p)/n + z^2/4n^2)) / (1 + z^2/n)
     are closed-form per group, no second pass. The verdict fails when
     the LOWER bound clears ``threshold`` (solid evidence of excess);
@@ -407,31 +347,20 @@ def violation_rate_gate(
     Output per day (ordered): (day, n_rows, n_violations, rate 6dp,
     wilson_lower 6dp, wilson_upper 6dp, validation_status).
     """
-    from ..config import consts
-
-    s = source.select(
-        *[F.col(k).alias(f"__pk_{k}") for k in primary_keys],
-        *[F.col(c).alias(f"__s_{c}") for c in compare_cols],
-        F.col(day_col).alias("__s_day"),
-        F.lit(1).alias("__s_present"),
-    )
-    t = target.select(
-        *[F.col(k).alias(f"__pk_{k}") for k in primary_keys],
-        *[F.col(c).alias(f"__t_{c}") for c in compare_cols],
-        F.col(day_col).alias("__t_day"),
-        F.lit(1).alias("__t_present"),
-    )
-    j = s.join(t, [f"__pk_{k}" for k in primary_keys], "full_outer")
-    mismatch = F.lit(False)
-    for c in compare_cols:
-        mismatch = mismatch | ~F.col(f"__s_{c}").eqNullSafe(F.col(f"__t_{c}"))
+    day_is_key = day_col in primary_keys
+    value_cols = list(dict.fromkeys(
+        list(compare_cols) + ([] if day_is_key else [day_col])
+    ))
+    j = align(source, target, primary_keys, value_cols)
     viol = (
-        F.col("__s_present").isNull()
-        | F.col("__t_present").isNull()
-        | mismatch
+        F.col("__src_present").isNull()
+        | F.col("__tgt_present").isNull()
+        | any_differs(compare_cols)
     )
     day = F.date_format(
-        F.coalesce("__s_day", "__t_day"), "yyyy-MM-dd"
+        F.col(day_col) if day_is_key
+        else F.coalesce(f"__src_{day_col}", f"__tgt_{day_col}"),
+        "yyyy-MM-dd",
     ).alias("day")
     g = (
         j.select(day, viol.cast("int").alias("v"))

@@ -439,8 +439,9 @@ def kmeans_centroids_sampled(
     Standard IVF practice (FAISS trains quantizers on ~30×k sampled
     vectors, never the full corpus): take the ``sample_size`` rows with the
     smallest md5(id) — the same seeded, engine-portable pseudo-random draw
-    as deterministic_sample — in ONE Spark job (TakeOrderedAndProject:
-    per-partition partial top-k, no full sort, O(sample) driver memory),
+    as deterministic_sample — in one job after a row count
+    (TakeOrderedAndProject: per-partition partial top-k, no full sort,
+    O(min(sample, rows)) memory),
     then run the pure-Python Lloyd replay on the driver. Versus the
     distributed trainer this replaces ``iters + 1`` full-corpus Spark jobs
     with one bounded sample job: at billions of vectors the quantizer cost
@@ -450,11 +451,15 @@ def kmeans_centroids_sampled(
     replayable: the DuckDB oracle re-draws the identical sample (same md5
     order) and calls the same local Lloyd.
     """
+    # the top-k buffer is sized by the limit: clamp it to the data, so a
+    # "sample everything" bound (sample_size >= rows) costs O(rows), not
+    # O(sample_size)
+    n = min(sample_size, corpus.count())
     rows = (
         corpus.select(id_col, vec_col)
         .withColumn("__h", F.md5(F.col(id_col).cast("string")))
         .orderBy("__h")
-        .limit(sample_size)
+        .limit(n)
         .collect()
     )
     return kmeans_centroids_local(

@@ -21,8 +21,9 @@ partition-level rollup, so one pass answers both "what rows changed" and
 Scale posture (identical to row_compare.row_violations):
 - each side is projected map-side to (pks, partition value, 32-byte binary
   sha256) BEFORE the exchange, so the shuffle carries ~50 bytes/row;
-- ONE full-outer sort-merge join on the PK per diff (shuffle-free zip on
-  conv_id-bucketed snapshots); AQE skew-split handles hot keys;
+- ONE full-outer sort-merge join on the PK per diff (``combiner.align``,
+  the kernel row validation uses; shuffle-free zip on conv_id-bucketed
+  snapshots); AQE skew-split handles hot keys;
 - the row-level output is a *filter* on the join (unchanged rows — the
   overwhelming majority between adjacent snapshots — are never
   materialized), and the summary is a map-side-combined count aggregate
@@ -34,8 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import consts
-from ..functions.calculated import build_row_hash
+from ..combiner import align
+from ..functions.calculated import build_row_hash, hash_part
 
 #: diff_status values, in output-severity order
 ADDED = "added"
@@ -71,14 +72,12 @@ def _project(
         proj.append(partition_col.alias("partition_id"))
     proj.append(F.col("hash__all"))
     if detail:
-        for c in cols:
-            col = F.col(c).cast("string")
-            col = F.coalesce(col, F.lit(consts.DEFAULT_REPLACEMENT_STRING))
-            if trim_strings:
-                col = F.rtrim(col)
-            if case_insensitive:
-                col = F.upper(col)
-            proj.append(F.xxhash64(col).alias(f"__colh_{c}"))
+        proj += [
+            F.xxhash64(hash_part(c, trim_strings, case_insensitive)).alias(
+                f"__colh_{c}"
+            )
+            for c in cols
+        ]
     return hashed.select(*proj), cols
 
 
@@ -111,48 +110,26 @@ def snapshot_diff(
     bucketed+sorted on the PK diff with ZERO exchanges
     (tests/test_bucketed_join.py).
     """
-    o, cols = _project(
-        old, primary_keys, compare_columns, partition_col,
-        trim_strings, case_insensitive, detail,
+    (o, cols), (n, _) = (
+        _project(side, primary_keys, compare_columns, partition_col,
+                 trim_strings, case_insensitive, detail)
+        for side in (old, new)
     )
-    n, _ = _project(
-        new, primary_keys, compare_columns, partition_col,
-        trim_strings, case_insensitive, detail,
-    )
-    det = cols if detail else []
-    o = o.select(
-        *[F.col(pk).alias(f"__o_{pk}") for pk in primary_keys],
-        *([F.col("partition_id").alias("__o_part")]
-          if partition_col is not None else []),
-        F.col("hash__all").alias("__o_hash"),
-        *[F.col(f"__colh_{c}").alias(f"__oc_{c}") for c in det],
-    )
-    n = n.select(
-        *[F.col(pk).alias(f"__n_{pk}") for pk in primary_keys],
-        *([F.col("partition_id").alias("__n_part")]
-          if partition_col is not None else []),
-        F.col("hash__all").alias("__n_hash"),
-        *[F.col(f"__colh_{c}").alias(f"__nc_{c}") for c in det],
-    )
-    cond = None
-    for pk in primary_keys:
-        lhs, rhs = F.col(f"__o_{pk}"), F.col(f"__n_{pk}")
-        c = lhs.eqNullSafe(rhs) if null_safe_pks else (lhs == rhs)
-        cond = c if cond is None else cond & c
-    j = o.join(n, cond, "full_outer")
+    det = [f"__colh_{c}" for c in cols] if detail else []
+    part = ["partition_id"] if partition_col is not None else []
+    j = align(o, n, primary_keys, part + ["hash__all"] + det,
+              null_safe=null_safe_pks)
     status = (
-        F.when(F.col("__o_hash").isNull(), F.lit(ADDED))
-        .when(F.col("__n_hash").isNull(), F.lit(REMOVED))
-        .when(F.col("__o_hash") == F.col("__n_hash"), F.lit(UNCHANGED))
+        F.when(F.col("__src_present").isNull(), F.lit(ADDED))
+        .when(F.col("__tgt_present").isNull(), F.lit(REMOVED))
+        .when(F.col("__src_hash__all") == F.col("__tgt_hash__all"),
+              F.lit(UNCHANGED))
         .otherwise(F.lit(CHANGED))
     )
-    out = [
-        F.coalesce(F.col(f"__o_{pk}"), F.col(f"__n_{pk}")).alias(pk)
-        for pk in primary_keys
-    ]
+    out = [F.col(pk) for pk in primary_keys]
     if partition_col is not None:
         out.append(
-            F.coalesce(F.col("__o_part"), F.col("__n_part")).alias(
+            F.coalesce("__src_partition_id", "__tgt_partition_id").alias(
                 "partition_id"
             )
         )
@@ -162,9 +139,10 @@ def snapshot_diff(
         diffs = F.array_compact(
             F.array(*[
                 F.when(
-                    F.col(f"__oc_{c}") != F.col(f"__nc_{c}"), F.lit(c)
+                    F.col(f"__src___colh_{c}") != F.col(f"__tgt___colh_{c}"),
+                    F.lit(c),
                 )
-                for c in det
+                for c in cols
             ])
         )
         out.append(

@@ -70,6 +70,20 @@ def build_column_validation_report(
     )
 
 
+def prepare_row_sides(
+    config: ValidationConfig, source: DataFrame, target: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The row sides every row-validation consumer compares: the config's
+    calculated fields, then its filters. The report, the lineage verdicts
+    and the rate gate all start from these, so they cannot diverge."""
+    src = apply_calculated_fields(source, config.calculated_fields)
+    tgt = apply_calculated_fields(target, config.calculated_fields)
+    if config.filters:
+        src = apply_filters(src, config.filters, "source")
+        tgt = apply_filters(tgt, config.filters, "target")
+    return src, tgt
+
+
 def run_validation(
     config: ValidationConfig,
     source: DataFrame | None = None,
@@ -121,11 +135,7 @@ def run_validation(
         )
 
     if vtype == consts.ROW_VALIDATION:
-        src = apply_calculated_fields(source, config.calculated_fields)
-        tgt = apply_calculated_fields(target, config.calculated_fields)
-        if config.filters:
-            src = apply_filters(src, config.filters, "source")
-            tgt = apply_filters(tgt, config.filters, "target")
+        src, tgt = prepare_row_sides(config, source, target)
         if config.use_random_row:
             # reference --use-random-row/--random-row-batch-size
             # (cli_tools.py:567-578): sample N source PKs, validate only
