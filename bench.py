@@ -282,11 +282,13 @@ def _run_suite_subprocess(master: str, replicate: int, ncores: int = 0) -> dict:
     if lines:
         try:
             res = json.loads(lines[-1])
-        except (ValueError, IndexError):
+        except ValueError:
             res = None
-    if res is None:
-        # surface the child's failure — a swallowed stderr turns one bad
-        # run into an undiagnosable empty protocol output
+    if not (isinstance(res, dict) and {"value", "rows"} <= res.keys()):
+        # no result record (a stray log line that parses as a number or a
+        # string is not one): surface the child's failure — a swallowed
+        # stderr turns one bad run into an undiagnosable empty protocol
+        # output
         sys.stderr.write(out.stderr[-4000:])
         raise RuntimeError(
             f"suite subprocess {master} exited {out.returncode} with no "

@@ -66,7 +66,7 @@ import json
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -1015,9 +1015,10 @@ def main(argv: list[str] | None = None) -> int:
 def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     from .config import ValidationConfig, consts
     from .lineage import LineageStore, config_hash
+    from .metadata import RunMetadata
     from .plans.compiler import prepare_row_sides, run_validation
     from .session import get_spark
-    from .sources.sinks import report_to_text, write_report
+    from .sources.sinks import data_files, report_to_text, write_report
 
     preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-job")
@@ -1039,6 +1040,8 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
         target = _load_side(spark, args.target_path, args.target_table)
         cfg_dict = _expand_star_aggregates(cfg_dict, source)
     config = ValidationConfig.from_dict(cfg_dict)
+    # one run id for the report and every lineage row this job writes
+    run = RunMetadata()
 
     ch = config_hash(cfg_dict)
     store = LineageStore(spark, args.lineage_dir) if args.lineage_dir else None
@@ -1105,7 +1108,6 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
         # the O(rows) full-outer join below then runs over dirty partitions
         # only. Fingerprints use the same --hash '*' chain as the row join,
         # so a cleared partition is cleared against the same bytes.
-        from .metadata import RunMetadata
         from .operators.checksums import (
             checksum_validation,
             failing_partition_predicate,
@@ -1122,26 +1124,32 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
             case_insensitive=config.case_insensitive_match,
         ).persist()
         try:
-            n_total = ck.count()
-            n_fail = ck.filter(
-                F.col("validation_status") == consts.VALIDATION_STATUS_FAIL
-            ).count()
+            # one row per partition: the summary and the drill-down ids
+            # come from one collect; the lineage append reads the cache
+            verdict_rows = ck.collect()
+            failing = [
+                r["partition_id"]
+                for r in verdict_rows
+                if r["validation_status"] == consts.VALIDATION_STATUS_FAIL
+            ]
             if store:
                 store.append_verdicts(
-                    ck, ch, RunMetadata().run_id,
-                    f"{config.validation_type}:checksum",
+                    ck, ch, run.run_id, f"{config.validation_type}:checksum"
                 )
-            pred = failing_partition_predicate(ck, pexpr)
         finally:
             ck.unpersist()
         print(
-            f"checksum-first: {n_fail}/{n_total} partitions failed the "
-            "fingerprint compare; row validation drills into those only"
+            f"checksum-first: {len(failing)}/{len(verdict_rows)} partitions "
+            "failed the fingerprint compare; row validation drills into "
+            "those only"
         )
+        pred = failing_partition_predicate(failing, pexpr)
         source = source.filter(pred)
         target = target.filter(pred)
 
-    report = run_validation(config, source, target, spark=spark)
+    report = run_validation(
+        config, source, target, spark=spark, run_metadata=run
+    )
     row_src = row_tgt = None
     if config.validation_type == consts.ROW_VALIDATION and source is not None:
         # lineage verdicts and the rate gate compare what the report does
@@ -1153,20 +1161,51 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
         if not preexisting:
             spark.stop()
         return 0
-    # every downstream action (verdicts, write, text, exit count) re-executes
-    # the validation DAG without this — for a ROW validation that is the full
-    # O(rows) outer join paid up to 4x (VERDICT r2 'what's wrong' #2)
-    report = report.persist()
+    is_fail = F.col("validation_status") == consts.VALIDATION_STATUS_FAIL
+    if args.output:
+        # the write is the report's only pass: it observes the counts the
+        # exit code needs, and stdout reads this run's rows back from the
+        # files this write added. The output is append-mode, so earlier
+        # runs' files are never opened; the run-id filter drops the rows of
+        # a concurrent append into the same directory. An empty row report
+        # adds no data file and reads back as zero rows.
+        obs = Observation()
+        observed = report.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.when(is_fail, 1)).alias("n_fail"),
+        )
+        before = data_files(spark, args.output, report.schema)
+        if config.validation_type == consts.ROW_VALIDATION:
+            # O(rows) report: partitioned parallel append, never a global
+            # sort / coalesce(1); partitioning on validation_status makes
+            # --filter-status reads partition-pruned
+            write_report(
+                observed, args.output, partition_by=["validation_status"]
+            )
+        else:
+            write_report(observed, args.output, small=True)
+        failed = obs.get["n_fail"] > 0
+        added = sorted(data_files(spark, args.output, report.schema) - before)
+        shown = (
+            spark.read.schema(report.schema)
+            .option("basePath", args.output)
+            .parquet(*added)
+            if added
+            else spark.createDataFrame([], report.schema)
+        ).filter(F.col("run_id") == run.run_id)
+    else:
+        # no output to read back: the text render, the fail count and the
+        # grouped lineage verdicts all read the report; the first action
+        # fills the cache
+        shown = report = report.persist()
     try:
-        report.count()  # materialize once, here
-
         if store and manifest is not None and row_src is not None:
             # per-manifest-partition verdicts into the lineage table: the
             # resumable unit matches reference generate-table-partitions'
             # YAMLs. The verdicts align the compiler's prepared sides on the
             # config's PKs, like the report, and read each row's partition
             # off its aligned (coalesced) PK columns.
-            from .metadata import RunMetadata
             from .operators.partitioning import assign_partition_id
             from .operators.row_compare import row_compare_verdicts
 
@@ -1193,12 +1232,12 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
                 trim_string_pks=config.trim_string_pks,
             )
             store.append_verdicts(
-                verdicts, ch, RunMetadata().run_id, config.validation_type
+                verdicts, ch, run.run_id, config.validation_type
             )
 
         if store and args.partition_by and config.group_by:
             # grouped runs: one verdict row per partition into lineage
-            verdicts = report.groupBy(
+            verdicts = shown.groupBy(
                 F.col("group_by_columns").alias("partition_id")
             ).agg(
                 F.count(F.lit(1)).alias("n_validations"),
@@ -1211,32 +1250,18 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
                 ).alias("validation_status"),
             )
             store.append_verdicts(
-                verdicts, ch, report.first().run_id, config.validation_type
+                verdicts, ch, run.run_id, config.validation_type
             )
 
-        if args.output:
-            if config.validation_type == consts.ROW_VALIDATION:
-                # O(rows) report: partitioned parallel append, never a global
-                # sort / coalesce(1); partitioning on validation_status makes
-                # --filter-status reads partition-pruned
-                write_report(
-                    report, args.output, partition_by=["validation_status"]
-                )
-            else:
-                write_report(report, args.output, small=True)
         print(
             report_to_text(
-                report,
+                shown,
                 status_filter=args.filter_status,
                 fmt=getattr(args, "format", "table"),
             )
         )
-        failed = (
-            report.filter(
-                F.col("validation_status") == consts.VALIDATION_STATUS_FAIL
-            ).count()
-            > 0
-        )
+        if not args.output:
+            failed = report.filter(is_fail).count() > 0
 
         gate_spec = getattr(args, "rate_gate", None)
         if gate_spec and row_src is not None:
@@ -1272,18 +1297,13 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
                     )
                 )
                 failed = failed or (
-                    gate.filter(
-                        F.col("validation_status")
-                        == consts.VALIDATION_STATUS_FAIL
-                    )
-                    .limit(1)
-                    .count()
-                    > 0
+                    gate.filter(is_fail).limit(1).count() > 0
                 )
             finally:
                 gate.unpersist()
     finally:
-        report.unpersist()
+        if not args.output:
+            report.unpersist()
     if not preexisting:  # don't stop a session the caller owns
         spark.stop()
     return 1 if failed else 0

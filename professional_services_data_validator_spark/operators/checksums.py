@@ -27,6 +27,8 @@ fingerprint validates the same bytes the row validation would.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -121,19 +123,15 @@ def checksum_validation(
 
 
 def failing_partition_predicate(
-    verdicts: DataFrame, partition_col: Column
+    failing: Iterable[str], partition_col: Column
 ) -> Column:
     """Filter predicate selecting rows in failing partitions — the
     drill-down step: apply to BOTH sides before ``row_violations`` so the
-    expensive PK join runs over dirty partitions only. Collects only the
-    failing partition ids (small by construction: a validation run where
-    most partitions fail should run the plain row validation instead)."""
-    failing = [
-        r["partition_id"]
-        for r in verdicts.filter(
-            F.col("validation_status") == consts.VALIDATION_STATUS_FAIL
-        ).select("partition_id").collect()
-    ]
+    expensive PK join runs over dirty partitions only. ``failing`` is the
+    failing partition ids, collected from the verdicts (small by
+    construction: a validation run where most partitions fail should run
+    the plain row validation instead)."""
+    failing = list(failing)
     if not failing:
         return F.lit(False)
     return partition_col.isin(failing)

@@ -268,7 +268,7 @@ def lsh_candidates(
 
 def jaccard_verify(
     candidates: DataFrame,
-    sh: DataFrame,
+    sh: DataFrame | None,
     threshold: float = 0.5,
     reliable_checkpoint: bool = False,
     sh_slicer=None,
@@ -304,7 +304,12 @@ def jaccard_verify(
     ``reliable_checkpoint=True`` to trade eager HDFS/object-store writes
     for executor-loss recoverability — the same guidance as
     :func:`connected_components`.
+
+    Either ``sh`` (the shingle stream) or ``sh_slicer`` (id set -> its
+    shingle slice) must be given; ``sh_slicer`` wins when both are.
     """
+    if sh is None and sh_slicer is None:
+        raise ValueError("provide sh or sh_slicer")
     _ckpt = (
         (lambda d: d.checkpoint())
         if reliable_checkpoint

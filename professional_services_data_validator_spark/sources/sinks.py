@@ -8,8 +8,11 @@ the final (small) report.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from urllib.parse import unquote
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def safe_collect(df: DataFrame, max_rows: int = 50_000) -> list:
@@ -49,6 +52,9 @@ def write_report(
       keep the deterministic single sorted file — they are tiny by
       construction (one row per validation x group).
     - anything else: sortWithinPartitions + parallel write.
+
+    An observed report (``DataFrame.observe``) is executed exactly once by
+    the partitioned and small writes, so its metrics count each row once.
     """
     sort_cols = [
         c
@@ -62,11 +68,33 @@ def write_report(
     if small is None:
         small = report.limit(max_small_rows + 1).count() <= max_small_rows
     if small:
-        ordered = report.orderBy(*sort_cols) if sort_cols else report
-        ordered.coalesce(1).write.mode("append").format(fmt).save(path)
+        # one sorted file through a single-partition shuffle: a global
+        # orderBy would first run a sampling job over the report, which
+        # re-executes its plan and double-counts an observed metric
+        one = report.repartition(1)
+        ordered = one.sortWithinPartitions(*sort_cols) if sort_cols else one
+        ordered.write.mode("append").format(fmt).save(path)
     else:
         w = report.sortWithinPartitions(*sort_cols) if sort_cols else report
         w.write.mode("append").format(fmt).save(path)
+
+
+def data_files(
+    spark: SparkSession, path: str, schema: StructType
+) -> set[str]:
+    """The data files under ``path`` as Spark's reader lists them (hidden
+    ``_SUCCESS``, ``_temporary`` and ``.crc`` entries skipped); empty when
+    ``path`` does not exist. With ``schema`` given the listing opens no
+    file, so diffing it around an append names that append's files without
+    reading the earlier ones. The listing crosses into Python as one joined
+    string (a per-file crossing costs more than the listing itself) of
+    URIs, decoded back to the paths a reader takes."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not root.getFileSystem(spark._jsc.hadoopConfiguration()).exists(root):
+        return set()
+    files = spark.read.schema(schema).parquet(path)._jdf.inputFiles()
+    joined = spark._jvm.org.apache.hadoop.util.StringUtils.join("\n", files)
+    return {unquote(f) for f in joined.splitlines()}
 
 
 def write_bucketed_table(

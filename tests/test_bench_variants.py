@@ -6,6 +6,7 @@ comparison; see BASELINE.md). This guards against the two variants drifting
 apart: same columns, same row multiset.
 """
 
+import json
 import os
 import sys
 
@@ -37,3 +38,23 @@ def test_bench_variant_matches_contract(name, spark):
     c_rows = sorted(tuple(map(str, r)) for r in contract.collect())
     b_rows = sorted(tuple(map(str, r)) for r in bench.collect())
     assert c_rows == b_rows
+
+
+def test_suite_subprocess_accepts_only_a_result_record(monkeypatch):
+    """A child's last stdout line counts as the suite result only when it is
+    a record with the suite's keys; any other JSON value takes the raise
+    path that shows the child's stderr."""
+    import subprocess
+
+    import bench
+
+    def child(stdout):
+        return lambda *a, **k: subprocess.CompletedProcess(a, 1, stdout, "boom")
+
+    for line in ("42", '"done"', "[1, 2]", '{"value": 1.0}'):
+        monkeypatch.setattr(subprocess, "run", child(f"log\n{line}\n"))
+        with pytest.raises(RuntimeError, match="no parsable result line"):
+            bench._run_suite_subprocess("local[1]", 1)
+    rec = {"value": 1.5, "rows": 10}
+    monkeypatch.setattr(subprocess, "run", child(json.dumps(rec) + "\n"))
+    assert bench._run_suite_subprocess("local[1]", 1) == rec

@@ -71,8 +71,13 @@ def test_checksum_drilldown_equals_full_row_validation(spark, transcripts):
     cleared)."""
     src, tgt = _sides(spark, transcripts)
     verdicts = checksum_validation(src, tgt, _day(), HASH_COLS)
-    pred_s = failing_partition_predicate(verdicts, _day())
-    pred_t = failing_partition_predicate(verdicts, _day())
+    failing = [
+        r["partition_id"]
+        for r in verdicts.collect()
+        if r["validation_status"] == "fail"
+    ]
+    pred_s = failing_partition_predicate(failing, _day())
+    pred_t = failing_partition_predicate(failing, _day())
 
     drilled = row_violations(
         src.filter(pred_s), tgt.filter(pred_t),

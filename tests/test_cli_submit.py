@@ -1,5 +1,6 @@
 """spark-submit --py-files packaging + CLI job tests (north-rule surface)."""
 
+import json
 import os
 import subprocess
 import sys
@@ -263,13 +264,14 @@ def test_cli_validate_schema_flags_and_filters(spark):
         assert rc == 0  # identical schemas
 
 
-def test_cli_report_dag_executes_once(spark, monkeypatch):
+def test_cli_report_dag_executes_once(spark, monkeypatch, capsys):
     """VERDICT r2 #2: the job entrypoint used to re-execute the validation
     DAG for every downstream action (verdicts, write, text, exit count) —
-    up to 4x the full outer join. Proof of the persist fix: an accumulator
-    inside the report DAG counts row evaluations across ALL of main()'s
-    actions; with the persist it must equal n exactly (one materialization),
-    where the old code paid ~3n."""
+    up to 4x the full outer join. An accumulator inside the report DAG
+    counts row evaluations across ALL of main()'s actions; with --output
+    the write is the one pass (the exit code comes from counts observed
+    during it, the text from the written rows), so it must equal n
+    exactly, where the old code paid ~3n."""
     import professional_services_data_validator_spark.plans.compiler as compiler
     from pyspark.sql import functions as F
 
@@ -287,7 +289,9 @@ def test_cli_report_dag_executes_once(spark, monkeypatch):
         s = source.sparkSession if source is not None else spark
         return s.range(n).select(
             bump(F.col("id").cast("int")).alias("checked"),
-            F.lit("r1").alias("run_id"),
+            F.lit(run_metadata.run_id if run_metadata else "r1").alias(
+                "run_id"
+            ),
             F.lit("success").alias("validation_status"),
         )
 
@@ -305,9 +309,14 @@ def test_cli_report_dag_executes_once(spark, monkeypatch):
                 "--source-path", d + "/src",
                 "--target-path", d + "/tgt",
                 "--output", d + "/rep",
+                "--format", "json",
             ]
         )
         assert rc == 0
+    shown = [
+        ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("[")
+    ]
+    assert len(json.loads(shown[-1])) == n  # the read-back render ran
     assert acc.value == n, f"report DAG executed {acc.value / n:.1f}x"
 
 

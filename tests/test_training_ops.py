@@ -3,11 +3,13 @@ text analysis, multimodal plumbing."""
 
 import math
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from professional_services_data_validator_spark.operators.dedup import (
     exact_dedup,
+    jaccard_verify,
     minhash_dedup_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -142,6 +144,13 @@ def test_lsh_no_quadratic_blowup(spark, sf_dir):
     n_docs = docs.count()
     # candidates must be a small fraction of the n^2/2 pair space
     assert cand.count() < n_docs * n_docs / 20
+
+
+def test_jaccard_verify_needs_a_shingle_source():
+    """Neither the shingle stream nor a slicer: a readable error before any
+    Spark work, not an AttributeError deep in the plan."""
+    with pytest.raises(ValueError, match="provide sh or sh_slicer"):
+        jaccard_verify(None, None)
 
 
 def test_ngram_jaccard_exact(spark):
