@@ -1349,12 +1349,15 @@ def _run_curate(args: argparse.Namespace) -> int:
     )
     if args.bench_path:
         bench = spark.read.parquet(args.bench_path)
+        hits = decontaminate(
+            docs, bench, idc, txt,
+            args.bench_id_col, args.bench_text_col,
+            k=args.contam_k, min_overlap=args.contam_min_overlap,
+        )
+        # the doc id is the first column; by name it is ambiguous when the
+        # bench id column has the same name (both default to doc_id)
         contam = (
-            decontaminate(
-                docs, bench, idc, txt,
-                args.bench_id_col, args.bench_text_col,
-                k=args.contam_k, min_overlap=args.contam_min_overlap,
-            )
+            hits.toDF(idc, *(f"__{c}" for c in hits.columns[1:]))
             .select(idc)
             .distinct()
             .withColumn("is_contaminated", F.lit(True))

@@ -1,27 +1,28 @@
-"""Interleaved A/B comparison of two checkouts on one perfbench workload.
+"""Interleaved A/B comparison of two checkouts on perfbench workloads.
 
 Usage, from the repository root (each checkout is a directory holding the
-repository at one commit, e.g. made with ``git worktree add``):
+repository at one commit, e.g. made with ``git archive <commit> | tar -x``):
 
     python3 scripts/perfbench_ab.py --base ../parent --head . \\
-        --workload row_full --pairs 10 --seeds 1-10
+        --workload row_full,checks_suite --pairs 10 --seeds 1-10
 
 Pair ``i`` runs ``perfbench/run.py`` (tracing off, the run length
-BENCHMARK.json fixes) once in each checkout with seed ``seeds[i % n]``; the
-base runs first in even pairs and the head first in odd ones, so host drift
-falls on both sides alike. Each run is checked the way ``perfbench/spread.py``
-checks a sweep run (a complete, correct result record) and its metrics are
-printed as it finishes.
+BENCHMARK.json fixes) once in each checkout for every listed workload with
+seed ``seeds[i % n]``; the base runs first in even pairs and the head first
+in odd ones, so host drift falls on both sides alike, and all workloads are
+measured in the same sitting. Each run is checked the way
+``perfbench/spread.py`` checks a sweep run (a complete, correct result
+record) and its metrics are printed as it finishes.
 
-For each end-to-end metric the summary gives each side's median and
-quartiles, the head's median change, and the share of pairs the head won
-(ties count for neither). A gain is flagged when the head wins at least
-nine tenths of the pairs and the medians differ by more than the base's
-quartile distance; a regression when the head's median is worse than the
-base's by more than the metric's bound; ``unresolved`` when neither holds
-and the base's own quartile distance is wider than the bound, unless every
-head run reads better than every base run. The last stdout line is a JSON
-record of every run and the summary.
+For each workload and end-to-end metric the summary gives each side's
+median and quartiles, the head's median change, and the share of pairs the
+head won (ties count for neither). A gain is flagged when the head wins at
+least nine tenths of the pairs and the medians differ by more than the
+base's quartile distance; a regression when the head's median is worse than
+the base's by more than the metric's bound; ``unresolved`` when neither
+holds and the base's own quartile distance is wider than the bound, unless
+every head run reads better than every base run. The last stdout line is a
+JSON record of every run and the summaries, keyed by workload.
 """
 
 from __future__ import annotations
@@ -87,7 +88,8 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True, help="checkout of the parent commit")
     ap.add_argument("--head", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
+    ap.add_argument("--workload", required=True,
+                    help="comma-separated workloads, e.g. row_full,checks_suite")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", default="1-10")
     args = ap.parse_args(argv)
@@ -98,28 +100,33 @@ def main(argv=None) -> int:
     specs = bench["end_to_end"]
     names = {m["name"]: m["unit"] for m in specs}
     seeds = parse_seeds(args.seeds)
-    runs = {"base": [], "head": []}
+    workloads = args.workload.split(",")
+    runs = {w: {"base": [], "head": []} for w in workloads}
     for i in range(args.pairs):
         seed = seeds[i % len(seeds)]
         order = ("base", "head") if i % 2 == 0 else ("head", "base")
-        for side in order:
-            vals = run_once(getattr(args, side), bench, args.workload, seed, names)
-            runs[side].append({"pair": i, "seed": seed, **vals})
-            print(f"pair {i} seed {seed} {side}: "
-                  + " ".join(f"{n}={vals[n]:.4g}" for n in names), flush=True)
+        for w in workloads:
+            for side in order:
+                vals = run_once(getattr(args, side), bench, w, seed, names)
+                runs[w][side].append({"pair": i, "seed": seed, **vals})
+                print(f"pair {i} seed {seed} {w} {side}: "
+                      + " ".join(f"{n}={vals[n]:.4g}" for n in names), flush=True)
 
     summary = {}
-    print(f"\n{args.workload}, {args.pairs} pairs; base median [q1, q3] -> head median "
-          "[q1, q3], change, head wins")
-    for m in specs:
-        n = m["name"]
-        s = summarize(m, [r[n] for r in runs["base"]], [r[n] for r in runs["head"]])
-        summary[n] = s
-        b, h = s["base"], s["head"]
-        print(f"{n:>12}: {b['median']:.4g} [{b['q1']:.4g}, {b['q3']:.4g}] -> "
-              f"{h['median']:.4g} [{h['q1']:.4g}, {h['q3']:.4g}], "
-              f"{s['change']:+.1%}, {s['wins']}/{s['pairs']}: {s['verdict']}")
-    print(json.dumps({"workload": args.workload, "runs": runs, "summary": summary}))
+    for w in workloads:
+        print(f"\n{w}, {args.pairs} pairs; base median [q1, q3] -> head median "
+              "[q1, q3], change, head wins")
+        summary[w] = {}
+        for m in specs:
+            n = m["name"]
+            s = summarize(m, [r[n] for r in runs[w]["base"]],
+                          [r[n] for r in runs[w]["head"]])
+            summary[w][n] = s
+            b, h = s["base"], s["head"]
+            print(f"{n:>12}: {b['median']:.4g} [{b['q1']:.4g}, {b['q3']:.4g}] -> "
+                  f"{h['median']:.4g} [{h['q1']:.4g}, {h['q3']:.4g}], "
+                  f"{s['change']:+.1%}, {s['wins']}/{s['pairs']}: {s['verdict']}")
+    print(json.dumps({"runs": runs, "summary": summary}))
     return 0
 
 

@@ -594,6 +594,45 @@ def test_cli_curate_seen_path_incremental(spark, tmp_path, capsys):
     assert f"{docs.count() - len(want)} already-ingested docs skipped" in out
 
 
+def test_cli_curate_bench_path_default_id_columns(spark, tmp_path, capsys):
+    """curate --bench-path with the default id columns: corpus and bench
+    set both carry ``doc_id``, so decontaminate's output holds two columns
+    of that name; the CLI must still flag exactly the doc that shares a
+    shingle with the bench doc."""
+    from professional_services_data_validator_spark.cli import main
+
+    docs_p, bench_p = str(tmp_path / "docs"), str(tmp_path / "bench")
+    spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "a stitch in time saves nine they say often"),
+            (3, "every cloud has a silver lining in the end"),
+            (4, "all that glitters is not gold as we know"),
+            (5, "where there is smoke there is usually fire"),
+            (6, "actions speak louder than words in most cases"),
+        ],
+        "doc_id int, text string",
+    ).write.parquet(docs_p)
+    spark.createDataFrame(
+        [(100, "quiz: the quick brown fox jumps over it")],
+        "doc_id int, text string",
+    ).write.parquet(bench_p)
+    out_p = str(tmp_path / "verdicts")
+    rc = main([
+        "curate", "--docs-path", docs_p, "--bench-path", bench_p,
+        "--dedup-shingle-k", "2", "--minhash-num", "8",
+        "--minhash-bands", "4", "--dedup-threshold", "0.5",
+        "--contam-k", "3", "--output", out_p,
+    ])
+    assert rc == 0
+    got = {
+        r["doc_id"]: r["is_contaminated"]
+        for r in spark.read.parquet(out_p).collect()
+    }
+    assert got == {d: d == 1 for d in range(1, 7)}
+    assert "1 contaminated" in capsys.readouterr().out
+
+
 def test_cli_profile_entropy_and_skew_sections(spark, tmp_path, capsys):
     """profile --entropy --skew-key adds sections that equal the operators
     run directly (parquet outputs byte-equal)."""
