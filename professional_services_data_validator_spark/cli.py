@@ -69,6 +69,8 @@ import sys
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .session import get_spark, stop_spark
+
 
 def load_config(path: str) -> dict:
     with open(path) as f:
@@ -737,9 +739,6 @@ def _load_side(spark: SparkSession, path: str | None, table: str | None):
 def _run_query(args: argparse.Namespace) -> int:
     """Ad-hoc SQL runner (reference cli_tools.py:364-371 run_raw_query:
     execute against a connection, print the result)."""
-    from .session import get_spark
-
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-query")
     _register_tables(spark, args.table)
     df = spark.sql(args.sql)
@@ -754,8 +753,6 @@ def _run_query(args: argparse.Namespace) -> int:
     print(pdf.to_string(index=False))
     if truncated:
         print(f"... (truncated at {args.max_rows} rows)")
-    if not preexisting:
-        spark.stop()
     return 0
 
 
@@ -895,23 +892,17 @@ def _run_generate_partitions(args: argparse.Namespace) -> int:
     import yaml
 
     from .operators.partitioning import partition_manifest
-    from .session import get_spark
 
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-gtp")
-    try:
-        source = _load_side(spark, args.source_path, args.source_table)
-        pkeys = _split_cols(args.primary_keys)
-        manifest = partition_manifest(source, pkeys, args.partition_num)
-        clauses = [
-            r["where_clause"]
-            for r in sorted(
-                manifest.collect(), key=lambda r: int(r["partition_idx"])
-            )
-        ]
-    finally:
-        if not preexisting:
-            spark.stop()
+    source = _load_side(spark, args.source_path, args.source_table)
+    pkeys = _split_cols(args.primary_keys)
+    manifest = partition_manifest(source, pkeys, args.partition_num)
+    clauses = [
+        r["where_clause"]
+        for r in sorted(
+            manifest.collect(), key=lambda r: int(r["partition_idx"])
+        )
+    ]
 
     base: dict = {
         "type": "Row",
@@ -966,17 +957,11 @@ def _run_generate_partitions(args: argparse.Namespace) -> int:
 def _run_find_tables(args: argparse.Namespace) -> int:
     """find-tables (reference cli_tools.py:343-360): print JSON pairs of
     fuzzy-matched table names."""
-    from .session import get_spark
     from .sources.readers import find_tables
 
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-find-tables")
-    try:
-        _register_tables(spark, args.table)
-        print(json.dumps(find_tables(spark, args.score_cutoff)))
-    finally:
-        if not preexisting:
-            spark.stop()
+    _register_tables(spark, args.table)
+    print(json.dumps(find_tables(spark, args.score_cutoff)))
     return 0
 
 
@@ -987,22 +972,31 @@ def main(argv: list[str] | None = None) -> int:
     if argv and argv[0].startswith("-"):
         argv = ["run"] + argv
     args = build_parser().parse_args(argv)
-    if args.command == "query":
-        return _run_query(args)
-    if args.command == "configs":
-        return _run_configs_cmd(args)
-    if args.command == "generate-table-partitions":
-        return _run_generate_partitions(args)
-    if args.command == "find-tables":
-        return _run_find_tables(args)
-    if args.command == "curate":
-        return _run_curate(args)
-    if args.command == "expect":
-        return _run_expect(args)
-    if args.command == "profile":
-        return _run_profile(args)
-    if args.command == "snapshot-diff":
-        return _run_snapshot_diff(args)
+    # one session per call, whatever the command (a multi-block `configs
+    # run` reuses it through getOrCreate); stopped here, also when the
+    # command raises, unless a caller (a test, a notebook, a benchmark
+    # harness) had it active before this call
+    owns_session = SparkSession.getActiveSession() is None
+    try:
+        return _dispatch(args)
+    finally:
+        if owns_session:
+            stop_spark()
+
+
+def _dispatch(args: argparse.Namespace) -> int:
+    commands = {
+        "query": _run_query,
+        "configs": _run_configs_cmd,
+        "generate-table-partitions": _run_generate_partitions,
+        "find-tables": _run_find_tables,
+        "curate": _run_curate,
+        "expect": _run_expect,
+        "profile": _run_profile,
+        "snapshot-diff": _run_snapshot_diff,
+    }
+    if args.command in commands:
+        return commands[args.command](args)
     if args.command == "validate":
         cfg_dict = _config_dict_from_flags(args)
         if args.config_file or args.config_file_json:
@@ -1016,11 +1010,13 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     from .config import ValidationConfig, consts
     from .lineage import LineageStore, config_hash
     from .metadata import RunMetadata
-    from .plans.compiler import prepare_row_sides, run_validation
-    from .session import get_spark
+    from .plans.compiler import (
+        compared_columns,
+        prepare_row_sides,
+        run_validation,
+    )
     from .sources.sinks import data_files, report_to_text, write_report
 
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-job")
 
     is_custom_query = cfg_dict.get("type") == consts.CUSTOM_QUERY
@@ -1099,28 +1095,25 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
             target = target.filter(F.expr(wc))
 
     if (
-        getattr(args, "checksum_first", None)
+        args.checksum_first
         and config.validation_type == consts.ROW_VALIDATION
         and source is not None
     ):
         # checksum-first drilldown: the fingerprint pass clears clean
         # partitions with a map-side-combined aggregate (no PK shuffle);
         # the O(rows) full-outer join below then runs over dirty partitions
-        # only. Fingerprints use the same --hash '*' chain as the row join,
-        # so a cleared partition is cleared against the same bytes.
+        # only. Fingerprints use the same --hash chain over the same
+        # prepared sides and compared columns as the row join, so a cleared
+        # partition is cleared against the same bytes.
         from .operators.checksums import (
             checksum_validation,
             failing_partition_predicate,
         )
 
         pexpr = F.expr(args.checksum_first).cast("string")
-        ck_cols = (
-            [c for c in source.columns if c not in config.primary_keys]
-            if (config.hash_columns or "*") == "*"
-            else list(config.hash_columns)
-        )
+        ck_src, ck_tgt = prepare_row_sides(config, source, target)
         ck = checksum_validation(
-            source, target, pexpr, ck_cols,
+            ck_src, ck_tgt, pexpr, compared_columns(config, ck_src.columns),
             case_insensitive=config.case_insensitive_match,
         ).persist()
         try:
@@ -1154,12 +1147,10 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     if config.validation_type == consts.ROW_VALIDATION and source is not None:
         # lineage verdicts and the rate gate compare what the report does
         row_src, row_tgt = prepare_row_sides(config, source, target)
-    if getattr(args, "explain", False):
+    if args.explain:
         # dry run: show the physical plan the job WOULD execute — shuffle
         # count, join strategy, pushdown — without paying for it
         report.explain("formatted")
-        if not preexisting:
-            spark.stop()
         return 0
     is_fail = F.col("validation_status") == consts.VALIDATION_STATUS_FAIL
     if args.output:
@@ -1214,9 +1205,7 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
             )
             bound_rows = [{k: r[f"{k}_lower"] for k in pkeys} for r in mrows]
             part_ids = [r["partition_id"] for r in mrows]
-            use_fields = (
-                config.comparison_fields if not config.hash_columns else None
-            )
+            fields = config.comparison_fields or None
             verdicts = row_compare_verdicts(
                 row_src,
                 row_tgt,
@@ -1225,9 +1214,10 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
                     pkeys, bound_rows, partition_ids=part_ids
                 ),
                 hash_columns=(
-                    (config.hash_columns or "*") if not use_fields else None
+                    None if fields
+                    else compared_columns(config, row_src.columns)
                 ),
-                comparison_fields=use_fields or None,
+                comparison_fields=fields,
                 case_insensitive=config.case_insensitive_match,
                 trim_string_pks=config.trim_string_pks,
             )
@@ -1268,22 +1258,16 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
             from .operators.row_compare import violation_rate_gate
 
             day_col, _, thr = gate_spec.partition(":")
-            cmp_cols = [c.column for c in config.comparison_fields] or [
-                c
-                for c in row_src.columns
-                if c not in config.primary_keys
-                and c != day_col
-                and c in row_tgt.columns
-                and (
-                    (config.hash_columns or "*") == "*"
-                    or c in config.hash_columns
-                )
-            ]
             gate = violation_rate_gate(
                 row_src,
                 row_tgt,
                 config.primary_keys,
-                cmp_cols,
+                # the day column is the gate's group key, not a compared
+                # value
+                [
+                    c for c in compared_columns(config, row_src.columns)
+                    if c != day_col
+                ],
                 day_col=day_col,
                 threshold=float(thr) if thr else 0.01,
             ).persist()
@@ -1304,13 +1288,7 @@ def _execute_job(args: argparse.Namespace, cfg_dict: dict) -> int:
     finally:
         if not args.output:
             report.unpersist()
-    if not preexisting:  # don't stop a session the caller owns
-        spark.stop()
     return 1 if failed else 0
-
-
-if __name__ == "__main__":  # pragma: no cover
-    sys.exit(main())
 
 
 def _run_curate(args: argparse.Namespace) -> int:
@@ -1320,7 +1298,6 @@ def _run_curate(args: argparse.Namespace) -> int:
     the expected product, not failures."""
     from .operators.dedup import decontaminate, dedup_clusters
     from .operators.text import quality_score
-    from .session import get_spark
 
     spark = get_spark("psdv-curate")
     docs = spark.read.parquet(args.docs_path)
@@ -1430,9 +1407,7 @@ def _run_profile(args: argparse.Namespace) -> int:
         frequent_values_approx,
         numeric_profile,
     )
-    from .session import get_spark
 
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-profile")
     df = _load_side(spark, args.source_path, args.source_table)
     numeric_types = ("int", "bigint", "smallint", "tinyint", "double",
@@ -1563,15 +1538,16 @@ def _run_profile(args: argparse.Namespace) -> int:
             out = out.unionByName(other)
         sections["numeric"] = out
     rc = 0
-    tgt_path = getattr(args, "target_path", None)
-    tgt_table = getattr(args, "target_table", None)
-    if (tgt_path or tgt_table) and num_cols:
+    tgt = (
+        _load_side(spark, args.target_path, args.target_table)
+        if args.target_path or args.target_table
+        else None
+    )
+    if tgt is not None and num_cols:
         # compare mode: melt every numeric column to one (column, v) long
         # frame per side (map-only), then ONE profile_compare pass — one
         # profile aggregate per side covers all columns
         from .operators.aggregates import profile_compare
-
-        tgt = _load_side(spark, tgt_path, tgt_table)
 
         def _melt(frame):
             return frame.select(
@@ -1596,12 +1572,11 @@ def _run_profile(args: argparse.Namespace) -> int:
             F.col("validation_status") == "fail"
         ).limit(1).count():
             rc = 1
-    if (tgt_path or tgt_table) and cat_cols:
+    if tgt is not None and cat_cols:
         # categorical compare: n_distinct / n_null / modal value+count per
         # string column (operators/aggregates.py categorical_compare)
         from .operators.aggregates import categorical_compare
 
-        tgt = _load_side(spark, tgt_path, tgt_table)
         cat_cmp = categorical_compare(
             df, tgt, cat_cols, threshold_pct=args.threshold_pct
         ).persist()
@@ -1616,12 +1591,9 @@ def _run_profile(args: argparse.Namespace) -> int:
             frame.write.mode("overwrite").parquet(
                 os.path.join(args.output, title)
             )
-    if (tgt_path or tgt_table) and num_cols:
-        sections["compare"].unpersist()
-    if "compare_categorical" in sections:
-        sections["compare_categorical"].unpersist()
-    if not preexisting:
-        spark.stop()
+    for title in ("compare", "compare_categorical"):
+        if title in sections:
+            sections[title].unpersist()
     return rc
 
 
@@ -1646,41 +1618,35 @@ def _rules_from_list(raw) -> list:
 
 
 def _run_expect_block(args: argparse.Namespace, block: dict) -> int:
-    """A `type: Expectations` block inside a validation config: single-table
-    rule evaluation wired into the same configs-run / run surface as the
-    two-table validations (rules:, approx:, plus the shared IO/report
-    flags). Exit 1 when any rule fails."""
+    """Single-table rule evaluation: the `expect` command and `type:
+    Expectations` blocks inside a validation config, wired into the same
+    configs-run / run surface as the two-table validations (rules:, approx:,
+    plus the shared IO/report flags). Exit 1 when any rule fails."""
     from .operators.expectations import run_expectations
-    from .session import get_spark
     from .sources.sinks import report_to_text
 
     rules = _rules_from_list(block.get("rules"))
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-expect")
+    source = _load_side(spark, args.source_path, args.source_table)
+    # tiny (one row per rule): one materialization feeds the sink, the
+    # text rendering and the exit code
+    report = run_expectations(
+        source, rules, approx=bool(block.get("approx"))
+    ).persist()
     try:
-        source = _load_side(spark, args.source_path, args.source_table)
-        report = run_expectations(
-            source, rules, approx=bool(block.get("approx"))
-        ).persist()
-        try:
-            if getattr(args, "output", None):
-                report.write.mode("overwrite").parquet(args.output)
-            print(
-                report_to_text(
-                    report,
-                    status_filter=getattr(args, "filter_status", None),
-                    cols=report.columns,
-                    fmt=getattr(args, "format", None) or "table",
-                )
+        if args.output:
+            report.write.mode("overwrite").parquet(args.output)
+        print(
+            report_to_text(
+                report,
+                status_filter=args.filter_status,
+                cols=report.columns,
+                fmt=args.format,
             )
-            n_fail = report.filter(
-                F.col("validation_status") == "fail"
-            ).count()
-        finally:
-            report.unpersist()
+        )
+        n_fail = report.filter(F.col("validation_status") == "fail").count()
     finally:
-        if not preexisting:
-            spark.stop()
+        report.unpersist()
     return 1 if n_fail else 0
 
 
@@ -1690,42 +1656,9 @@ def _run_expect(args: argparse.Namespace) -> int:
     (the `run` command's fail-count convention)."""
     import yaml
 
-    from .operators.expectations import run_expectations
-    from .session import get_spark
-    from .sources.sinks import report_to_text
-
     with open(args.rules) as f:
         raw = yaml.safe_load(f)
-    rules = _rules_from_list(raw)
-
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark("psdv-expect")
-    try:
-        source = _load_side(spark, args.source_path, args.source_table)
-        report = run_expectations(source, rules, approx=args.approx)
-        # tiny (one row per rule): a single driver-side collect feeds the
-        # sink, the text rendering, and the exit code — no recompute
-        report = report.persist()
-        try:
-            if args.output:
-                report.write.mode("overwrite").parquet(args.output)
-            print(
-                report_to_text(
-                    report,
-                    status_filter=args.filter_status,
-                    cols=report.columns,
-                    fmt=args.format,
-                )
-            )
-            n_fail = report.filter(
-                F.col("validation_status") == "fail"
-            ).count()
-        finally:
-            report.unpersist()
-    finally:
-        if not preexisting:
-            spark.stop()
-    return 1 if n_fail else 0
+    return _run_expect_block(args, {"rules": raw, "approx": args.approx})
 
 
 def _run_snapshot_diff(args: argparse.Namespace) -> int:
@@ -1740,86 +1673,84 @@ def _run_snapshot_diff(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from .operators.snapshot import snapshot_diff, UNCHANGED
-    from .session import get_spark
 
-    preexisting = SparkSession.getActiveSession() is not None
     spark = get_spark("psdv-snapshot-diff")
-    try:
-        old = _load_side(spark, args.old_path, args.old_table)
-        new = _load_side(spark, args.new_path, args.new_table)
-        pks = _split_cols(args.primary_keys)
-        part = (
-            F.expr(args.partition_by)
-            if args.partition_by
-            else F.lit("__all__")
+    old = _load_side(spark, args.old_path, args.old_table)
+    new = _load_side(spark, args.new_path, args.new_table)
+    pks = _split_cols(args.primary_keys)
+    part = (
+        F.expr(args.partition_by)
+        if args.partition_by
+        else F.lit("__all__")
+    )
+    diff = snapshot_diff(
+        old, new, pks,
+        compare_columns=_split_cols(args.compare_columns),
+        partition_col=part,
+        detail=bool(getattr(args, "detail", False)),
+    )
+    # the unchanged majority is dropped BEFORE persist: the cached
+    # frame is O(changes) + one count row per partition
+    changed = diff.filter(F.col("diff_status") != UNCHANGED).persist()
+    # rollup WITHOUT re-running the join: removed/changed/unchanged
+    # rows all carry the old side's partition value, so
+    # n_unchanged = n_old(partition) - n_removed - n_changed — one
+    # extra scan of the old side instead of a second two-sided join
+    chg = changed.groupBy("partition_id").agg(
+        F.count(F.when(F.col("diff_status") == "added", 1)).alias(
+            "n_added"),
+        F.count(F.when(F.col("diff_status") == "removed", 1)).alias(
+            "n_removed"),
+        F.count(F.when(F.col("diff_status") == "changed", 1)).alias(
+            "n_changed"),
+    )
+    n_old = old.groupBy(part.alias("partition_id")).agg(
+        F.count(F.lit(1)).alias("n_old")
+    )
+    counts = (
+        n_old.join(chg, "partition_id", "full_outer")
+        .fillna(0, ["n_old", "n_added", "n_removed", "n_changed"])
+        .select(
+            "partition_id", "n_added", "n_removed", "n_changed",
+            (F.col("n_old") - F.col("n_removed") - F.col("n_changed"))
+            .alias("n_unchanged"),
+            (
+                (F.col("n_added") > 0) | (F.col("n_removed") > 0)
+                | (F.col("n_changed") > 0)
+            ).alias("revalidate"),
         )
-        diff = snapshot_diff(
-            old, new, pks,
-            compare_columns=_split_cols(args.compare_columns),
-            partition_col=part,
-            detail=bool(getattr(args, "detail", False)),
-        )
-        # the unchanged majority is dropped BEFORE persist: the cached
-        # frame is O(changes) + one count row per partition
-        changed = diff.filter(F.col("diff_status") != UNCHANGED).persist()
-        # rollup WITHOUT re-running the join: removed/changed/unchanged
-        # rows all carry the old side's partition value, so
-        # n_unchanged = n_old(partition) - n_removed - n_changed — one
-        # extra scan of the old side instead of a second two-sided join
-        chg = changed.groupBy("partition_id").agg(
-            F.count(F.when(F.col("diff_status") == "added", 1)).alias(
-                "n_added"),
-            F.count(F.when(F.col("diff_status") == "removed", 1)).alias(
-                "n_removed"),
-            F.count(F.when(F.col("diff_status") == "changed", 1)).alias(
-                "n_changed"),
-        )
-        n_old = old.groupBy(part.alias("partition_id")).agg(
-            F.count(F.lit(1)).alias("n_old")
-        )
-        counts = (
-            n_old.join(chg, "partition_id", "full_outer")
-            .fillna(0, ["n_old", "n_added", "n_removed", "n_changed"])
-            .select(
-                "partition_id", "n_added", "n_removed", "n_changed",
-                (F.col("n_old") - F.col("n_removed") - F.col("n_changed"))
-                .alias("n_unchanged"),
-                (
-                    (F.col("n_added") > 0) | (F.col("n_removed") > 0)
-                    | (F.col("n_changed") > 0)
-                ).alias("revalidate"),
-            )
-        )
-        summ_rows = counts.orderBy("partition_id").limit(
-            args.max_print
-        ).collect()
-        pdf = pd.DataFrame(
-            [r.asDict() for r in summ_rows],
-            columns=["partition_id", "n_added", "n_removed", "n_changed",
-                     "n_unchanged", "revalidate"],
-        )
-        print(pdf.to_string(index=False))
-        if args.summary_output:
-            counts.write.mode("overwrite").parquet(args.summary_output)
-        if args.rows_output:
-            changed.write.mode("overwrite").parquet(args.rows_output)
-        if args.invalidate:
-            if not args.lineage_dir:
-                raise SystemExit("--invalidate needs --lineage-dir")
-            import uuid
+    )
+    summ_rows = counts.orderBy("partition_id").limit(
+        args.max_print
+    ).collect()
+    pdf = pd.DataFrame(
+        [r.asDict() for r in summ_rows],
+        columns=["partition_id", "n_added", "n_removed", "n_changed",
+                 "n_unchanged", "revalidate"],
+    )
+    print(pdf.to_string(index=False))
+    if args.summary_output:
+        counts.write.mode("overwrite").parquet(args.summary_output)
+    if args.rows_output:
+        changed.write.mode("overwrite").parquet(args.rows_output)
+    if args.invalidate:
+        if not args.lineage_dir:
+            raise SystemExit("--invalidate needs --lineage-dir")
+        import uuid
 
-            from .lineage import LineageStore
+        from .lineage import LineageStore
 
-            store = LineageStore(spark, args.lineage_dir)
-            n_inv = store.invalidate_partitions(
-                counts.filter(F.col("revalidate")).select("partition_id"),
-                run_id=str(uuid.uuid4()),
-            )
-            print(f"invalidated lineage rows: {n_inv}")
-        n_changed = changed.count()
-        print(f"\nchanged rows: {n_changed}")
-        changed.unpersist()
-        return 1 if n_changed else 0
-    finally:
-        if not preexisting:
-            spark.stop()
+        store = LineageStore(spark, args.lineage_dir)
+        n_inv = store.invalidate_partitions(
+            counts.filter(F.col("revalidate")).select("partition_id"),
+            run_id=str(uuid.uuid4()),
+        )
+        print(f"invalidated lineage rows: {n_inv}")
+    n_changed = changed.count()
+    print(f"\nchanged rows: {n_changed}")
+    changed.unpersist()
+    return 1 if n_changed else 0
+
+
+if __name__ == "__main__":  # pragma: no cover
+    sys.exit(main())

@@ -84,6 +84,24 @@ def prepare_row_sides(
     return src, tgt
 
 
+def compared_columns(config: ValidationConfig, columns: list[str]) -> list[str]:
+    """The non-PK columns a row validation compares, out of the prepared
+    source's ``columns``: the comparison fields, else the concat or hash
+    list, where ``'*'`` (or no list) means every non-PK column. The report,
+    the checksum-first fingerprints, the lineage verdicts and the rate gate
+    all compare these, so they cannot diverge."""
+    if config.comparison_fields:
+        return [f.column for f in config.comparison_fields]
+    cols = (
+        config.hash_columns
+        if config.concat_columns is None
+        else config.concat_columns
+    )
+    if cols is None or cols == "*":
+        return [c for c in columns if c not in config.primary_keys]
+    return list(cols)
+
+
 def run_validation(
     config: ValidationConfig,
     source: DataFrame | None = None,
@@ -136,6 +154,10 @@ def run_validation(
 
     if vtype == consts.ROW_VALIDATION:
         src, tgt = prepare_row_sides(config, source, target)
+        cols = compared_columns(config, src.columns)
+        fields = config.comparison_fields or None
+        concat = cols if config.concat_columns is not None else None
+        hashed = cols if not (fields or concat) else None
         if config.use_random_row:
             # reference --use-random-row/--random-row-batch-size
             # (cli_tools.py:567-578): sample N source PKs, validate only
@@ -150,27 +172,18 @@ def run_validation(
                     config.random_row_batch_size
                     or consts.DEFAULT_NUM_RANDOM_ROWS
                 ),
-                comparison_fields=config.comparison_fields or None,
-                hash_columns=(
-                    config.hash_columns
-                    if config.hash_columns is not None
-                    else (
-                        "*"
-                        if not config.comparison_fields
-                        and config.concat_columns is None
-                        else None
-                    )
-                ),
-                concat_columns=config.concat_columns,
+                comparison_fields=fields,
+                hash_columns=hashed,
+                concat_columns=concat,
                 run_metadata=run_metadata,
             )
         return row_compare(
             src,
             tgt,
             config.primary_keys,
-            comparison_fields=config.comparison_fields or None,
-            hash_columns=config.hash_columns,
-            concat_columns=config.concat_columns,
+            comparison_fields=fields,
+            hash_columns=hashed,
+            concat_columns=concat,
             run_metadata=run_metadata,
             source_table=config.source_table,
             target_table=config.target_table,

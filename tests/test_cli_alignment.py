@@ -21,14 +21,21 @@ def _write_sides(spark, sf_dir, d, target):
     return src.count()
 
 
-def _row_args(d):
+def _row_args(d, *compare):
     return [
         "validate", "row",
         "--source-path", d + "/src",
         "--target-path", d + "/tgt",
         "--primary-keys", "conv_id,turn_idx",
-        "--hash", "*",
+        *(compare or ("--hash", "*")),
     ]
+
+
+def _tool_changed(src):
+    """Every row differs from the source, but only in ``tool``."""
+    return src.withColumn(
+        "tool", F.concat(F.coalesce("tool", F.lit("")), F.lit("-changed"))
+    )
 
 
 def test_lineage_verdicts_join_on_primary_keys(spark, sf_dir):
@@ -89,3 +96,39 @@ def test_rate_gate_sees_the_filtered_sides(spark, sf_dir, capsys):
         out = capsys.readouterr().out
         assert "violation-rate gate" in out
         assert rc == 0
+
+
+def test_concat_lineage_verdicts_compare_the_concat_columns(spark, sf_dir):
+    """`--concat text` with a target differing only in `tool`: the report
+    passes, and so does every lineage partition (none left for --resume
+    to re-run)."""
+    from professional_services_data_validator_spark.cli import main
+
+    with tempfile.TemporaryDirectory() as d:
+        _write_sides(spark, sf_dir, d, _tool_changed)
+        rc = main(_row_args(d, "--concat", "text") + [
+            "--lineage-dir", d + "/lineage",
+            "--partition-keys", "conv_id,turn_idx",
+            "--num-partitions", "3",
+        ])
+        assert rc == 0
+        rows = spark.read.parquet(d + "/lineage").filter(
+            F.col("stage") == "Row"
+        ).collect()
+        assert len(rows) == 3
+        assert {r.verdict for r in rows} == {"success"}
+        assert [json.loads(r.metrics)["n_hash_mismatch"] for r in rows] == [
+            0, 0, 0
+        ]
+
+
+def test_concat_rate_gate_compares_the_concat_columns(spark, sf_dir):
+    """Same data: the rate gate counts no violation, as `--hash text`
+    does."""
+    from professional_services_data_validator_spark.cli import main
+
+    with tempfile.TemporaryDirectory() as d:
+        _write_sides(spark, sf_dir, d, _tool_changed)
+        assert main(_row_args(d, "--concat", "text") + [
+            "--rate-gate", "ts:0.0",
+        ]) == 0
